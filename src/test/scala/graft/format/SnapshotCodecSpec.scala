@@ -1,13 +1,11 @@
 package graft.format
 
-import java.nio.file.{Files, Paths}
 import java.time.Instant
 import org.scalatest.funsuite.AnyFunSuite
 
 class SnapshotCodecSpec extends AnyFunSuite {
 
-  private def readRef(rel: String): String =
-    new String(Files.readAllBytes(Paths.get("/root/reference/test-data", rel)))
+  private def readRef(rel: String): String = graft.ReferenceData.text(rel)
 
   test("parses reference table2 snapshot: schema + segment + delta") {
     val snap = SnapshotCodec.parse(readRef("table2/s1.json"))

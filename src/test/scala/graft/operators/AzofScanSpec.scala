@@ -7,13 +7,15 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** As-of merge-dedup scan parity against the reference's shipped
-  * test-data, porting the expectations of the reference scan tests
+/** As-of merge-dedup scan parity against the reference's fixture tables
+  * ([[graft.ReferenceData]]: its own test-data where a checkout is
+  * present, else the in-repo reference-format fixtures), porting the
+  * expectations of the reference scan tests
   * (reference: crates/azof/src/lakehouse.rs:136-369).
   */
 class AzofScanSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val lake = "/root/reference/test-data"
+  private lazy val lake = graft.ReferenceData.lake
 
   private def at(s: String): AsOf = AsOf.EventTime(Instant.parse(s))
 

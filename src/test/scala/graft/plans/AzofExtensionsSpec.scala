@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Native SQL time travel through AzofExtensions against the reference's
-  * shipped test-data — parity with the flagship DataFusion example
+  * fixture tables ([[graft.ReferenceData]]: its own test-data where a
+  * checkout is present, else the in-repo reference-format fixtures) —
+  * parity with the flagship DataFusion example
   * (reference: crates/azof-datafusion/examples/query_example.rs:19-30)
   * and the AT-rewrite tests (crates/azof-datafusion/src/parse.rs:170-285),
   * expressed in Spark's own TIMESTAMP AS OF / VERSION AS OF grammar.
@@ -16,7 +18,7 @@ class AzofExtensionsSpec extends AnyFunSuite {
   // reference lakehouse.
   private lazy val spark: SparkSession = {
     val s = graft.TestSpark.spark
-    s.conf.set("spark.azof.path", "/root/reference/test-data")
+    s.conf.set("spark.azof.path", graft.ReferenceData.lake)
     s
   }
 

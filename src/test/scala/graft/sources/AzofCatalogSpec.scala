@@ -13,7 +13,7 @@ class AzofCatalogSpec extends AnyFunSuite {
     val s = TestSpark.spark
     s.conf.set("spark.sql.catalog.lakecat",
       classOf[AzofCatalog].getName)
-    s.conf.set("spark.sql.catalog.lakecat.path", "/root/reference/test-data")
+    s.conf.set("spark.sql.catalog.lakecat.path", graft.ReferenceData.lake)
     s
   }
 

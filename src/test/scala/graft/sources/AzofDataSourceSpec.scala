@@ -17,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class AzofDataSourceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val lake = "/root/reference/test-data"
+  private lazy val lake = graft.ReferenceData.lake
 
   private def kv(rows: Array[Row]): Seq[(String, String)] =
     rows.map(r => (r.getString(0), r.getString(1))).sortBy(_._1).toSeq

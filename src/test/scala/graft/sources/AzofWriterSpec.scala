@@ -81,12 +81,12 @@ class AzofWriterSpec extends AnyFunSuite {
 
   test("CsvGen reads the reference's headerless CSV contract") {
     val snap = SnapshotCodec.parse(new String(Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/test-data/table2/s1.json"))))
+      java.nio.file.Paths.get(s"${graft.ReferenceData.lake}/table2/s1.json"))))
     val got = CsvGen.readCsv(spark, snap.schema,
-      "/root/reference/test-data/table2/base.csv")
+      s"${graft.ReferenceData.lake}/table2/base.csv")
     assert(got.columns.toSeq ==
       Seq("key", "event_time", "value1", "value2", "is_active", "created"))
-    val ref = spark.read.parquet("/root/reference/test-data/table2/base.parquet")
+    val ref = spark.read.parquet(s"${graft.ReferenceData.lake}/table2/base.parquet")
     assert(got.collect().map(_.toSeq).toSet == ref.collect().map(_.toSeq).toSet)
   }
 }

@@ -80,7 +80,7 @@ class StatisticsSpec extends AnyFunSuite {
     // reference's own test-data) reports None — a partial/absent sum
     // would UNDER-bound, the dangerous direction for a planner
     val foreign = new AzofRelation(spark.sqlContext,
-      "/root/reference/test-data", "table0", AsOf.Current, None)
+      graft.ReferenceData.lake, "table0", AsOf.Current, None)
     assert(foreign.estimatedRows.isEmpty)
   }
 
